@@ -25,7 +25,7 @@ from pyspark.sql import Window
 
 from docopenie_spark import datagen
 from docopenie_spark.functions import textnorm
-from docopenie_spark.operators import assembly, dedup, extract, ner, segment, similarity, textstats
+from docopenie_spark.operators import assembly, dedup, ner, segment, similarity, textstats
 from docopenie_spark.operators import tokenize as tok
 from docopenie_spark.plans.pipeline import run_pipeline
 from docopenie_spark.sources.transcripts import DERIVED_SQL_CTE, derived_from_documents
@@ -549,7 +549,6 @@ def _ner_branch_sql() -> str:
     from docopenie_spark.plans.pipeline import default_dictionaries
 
     firsts, gaz, lasts = default_dictionaries()
-    gaz = gaz | {r[0] for r in datagen.gazetteer_rows()}
     return f"""
         , caps AS (
           -- NNP ⇔ starts-uppercase on this corpus; adjacent-run merge
@@ -613,7 +612,6 @@ def _q_kg_ner_spans(spark, sf_dir):
     t = derived_from_documents(_entity_injected_docs(_docs(spark, sf_dir)))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}  # as run_pipeline does
     ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts)
     ents, _prons = ner.split_mentions(fused.split_entities(ann))
     return ents
@@ -652,7 +650,6 @@ def _q_kg_coref(spark, sf_dir):
     t = derived_from_documents(docs.withColumn("text", c))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}
     # persisted (r7): three readers, one Python pass (see _q_kg_linking)
     ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
     cl = coref.clusters(fused.split_entities(ann))
@@ -891,7 +888,6 @@ def _q_kg_linking(spark, sf_dir):
     t = derived_from_documents(docs.withColumn("text", c))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}
     # persisted (r7): split_triples / split_entities / split_sentences all
     # read this table — without the persist the fused Arrow pass executed
     # three times per materialization
@@ -997,7 +993,6 @@ def _q_kg_substitution(spark, sf_dir):
     t = derived_from_documents(docs.withColumn("text", c))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}
     # persisted (r7): three readers, one Python pass (see _q_kg_linking)
     ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
     tr = fused.split_triples(ann)
@@ -1081,7 +1076,6 @@ def _q_kg_coref_expansion(spark, sf_dir):
     t = derived_from_documents(docs.withColumn("text", c))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}
     # persisted (r7): three readers, one Python pass (see _q_kg_linking)
     ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
     cl = coref.clusters(fused.split_entities(ann))
@@ -1188,7 +1182,6 @@ def _q_kg_best_mention_rules(spark, sf_dir):
     t = derived_from_documents(docs.withColumn("text", c))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}
     ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts)
     ents, _prons = ner.split_mentions(fused.split_entities(ann))
     bems = bestmention.best_mentions(
@@ -1377,7 +1370,6 @@ def _q_kg_bem_features(spark, sf_dir):
     t = derived_from_documents(docs.withColumn("text", c))
     turns = assembly.with_turn_offsets(t)
     firsts, gaz, lasts = default_dictionaries()
-    gaz |= {r[0] for r in datagen.gazetteer_rows()}
     # persisted (r7): the mentions view feeds both the rule engine and
     # the coref clusters — two fused-pass executions without it
     ann = fused.parse_extract_annotate(turns, firsts, gaz, lasts).persist()
@@ -1814,8 +1806,7 @@ def _q_kg_sentences(spark, sf_dir):
 
 def _q_kg_triples_raw(spark, sf_dir):
     t = _kg_transcripts(spark, sf_dir)
-    parsed = tok.parsed_sentences(segment.sentences(assembly.with_turn_offsets(t)))
-    tr = extract.triples_raw(parsed)
+    tr = run_pipeline(spark, t, with_linking=False, with_coref_expansion=False).triples_raw
     return tr.select(
         "conv_id", "turn_idx", "sent_num",
         F.col("arg1.text").alias("arg1"), F.col("rel.text").alias("rel"),

@@ -6,13 +6,12 @@ sink (every column of every row computed, nothing written) and labeled
 jobs, without touching the frozen harness. Numbers from here are cited
 in OPTIMIZATION_r*.md next to the bench.py medians.
 
-Usage: python bench_extra.py [pipeline|headline|all]  (default all)
+Usage: python bench_extra.py [headline|all]  (default all; the same suite)
 
 Method: same session shape as bench.py (local[$SPARK_GRAFT_CPUS],
 shuffle.partitions = cpus), warmup pass first, then REPEATS interleaved
-rounds per stage, median reported, raw kept. Pipeline stages are timed
-with their upstream persists already materialized, so each number is
-that stage's own work (downstream of the shared fan-out points).
+rounds per stage, median reported, raw kept. Per-stage walls of the KG
+pipeline come from the plan-verified stage ledger in kgbench/ledger.py.
 """
 
 from __future__ import annotations
@@ -27,15 +26,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from docopenie_spark import datagen  # noqa: E402
-from docopenie_spark.operators import (  # noqa: E402
-    assembly, bestmention, coref, dedup, fused, link, ner, similarity,
-    substitute,
-)
-from docopenie_spark.plans import pipeline as pl  # noqa: E402
+from docopenie_spark.operators import dedup, similarity  # noqa: E402
 from docopenie_spark.session import get_spark  # noqa: E402
 
-TURNS_PER_DOC = 8
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 
 
@@ -71,86 +64,8 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n_docs = docs.count()
-    transcripts = datagen.transcripts_df(spark, TURNS_PER_DOC * n_docs)
 
     out: dict[str, dict] = {}
-
-    if which in ("pipeline", "all"):
-        # resolve flags outside the clock exactly like bench.py
-        total_turns, max_conv_turns = pl._input_stats(transcripts)
-        slim = total_turns >= pl.SLIM_SENTENCE_THRESHOLD
-        hot = (
-            pl.COREF_HOT_THRESHOLD
-            if max_conv_turns * pl.COREF_MENTIONS_PER_TURN_BOUND
-            > pl.COREF_HOT_THRESHOLD
-            else None
-        )
-        first_names, gaz_names, last_names = pl.default_dictionaries()
-        gaz_rows = datagen.gazetteer_rows()
-        gaz_names |= {r[0] for r in gaz_rows}
-        turns = assembly.with_turn_offsets(transcripts)
-
-        # materialized upstream inputs for the downstream stages
-        annotated = fused.parse_extract_annotate(
-            turns, first_names, gaz_names, last_names, rebalance=False,
-            emit_sentence_text=not slim,
-        ).persist()
-        annotated.count()
-        chunks = assembly.doc_chunks(transcripts).persist()
-        chunks.count()
-        sents = fused.split_sentences(annotated, turns if slim else None)
-        triples_raw = fused.split_triples(annotated)
-        mentions = fused.split_entities(annotated)
-        ents, _ = ner.split_mentions(mentions)
-        cl = coref.clusters(mentions, hot_threshold=hot).persist()
-        cl.count()
-        ed = datagen.entity_dict_df(spark)
-        lk = link.links(triples_raw, ed, clusters=cl, sentences=sents).persist()
-        lk.count()
-        bems = bestmention.best_mentions(ents, chunks, gaz_rows).persist()
-        bems.count()
-        bems_x = bestmention.expand_with_coref(bems, cl, lk)
-
-        def full_pipeline():
-            r = pl.run_pipeline(
-                spark, transcripts, slim_sentences=slim, coref_hot_threshold=hot
-            )
-            r.triples.count()
-            r.unpersist()
-
-        suite = [
-            ("turn_offsets", lambda: _noop(turns)),
-            ("doc_chunks", lambda: _noop(assembly.doc_chunks(transcripts))),
-            ("fused_arrow_pass", lambda: _noop(
-                fused.parse_extract_annotate(
-                    turns, first_names, gaz_names, last_names,
-                    rebalance=False, emit_sentence_text=not slim,
-                )
-            )),
-            ("coref_clusters", lambda: _noop(
-                coref.clusters(mentions, hot_threshold=hot)
-            )),
-            ("links", lambda: _noop(
-                link.links(triples_raw, ed, clusters=cl, sentences=sents)
-            )),
-            ("best_mentions", lambda: _noop(
-                bestmention.best_mentions(ents, chunks, gaz_rows)
-            )),
-            ("expand_with_coref", lambda: _noop(
-                bestmention.expand_with_coref(bems, cl, lk)
-            )),
-            ("substitute", lambda: _noop(
-                substitute.substituted_triples(
-                    triples_raw, bestmention.display_filter(bems_x)
-                )
-            )),
-            ("full_pipeline", full_pipeline),
-        ]
-        med, raw = run_suite(spark, suite)
-        out["pipeline"] = {"median": med, "raw": raw}
-        for df in (annotated, chunks, cl, lk, bems):
-            df.unpersist()
 
     if which in ("headline", "all"):
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import schemas
+from ..functions.sqlexpr import str_list
 from .ner import PRONOUN_TYPE
 
 _MALE_F = {"he", "him", "his"}
@@ -224,14 +225,11 @@ def _resolve_plain(m: DataFrame) -> DataFrame:
             for n, c in _CAT_SQL
         ],
     )
-    person_p = ", ".join(f"'{p}'" for p in sorted(_PERSON_PRON))
-    thing_p = ", ".join(f"'{p}'" for p in sorted(_THING_PRON))
-    plural_p = ", ".join(f"'{p}'" for p in sorted(_PLURAL_PRON))
     ckey = (
         "CASE WHEN is_pron = 1 THEN ("
-        f" CASE WHEN lower(text) IN ({person_p}) THEN _l_person"
-        f"      WHEN lower(text) IN ({thing_p}) THEN _l_thing"
-        f"      WHEN lower(text) IN ({plural_p}) THEN coalesce(_l_org, _l_any)"
+        f" CASE WHEN lower(text) IN ({str_list(_PERSON_PRON)}) THEN _l_person"
+        f"      WHEN lower(text) IN ({str_list(_THING_PRON)}) THEN _l_thing"
+        f"      WHEN lower(text) IN ({str_list(_PLURAL_PRON)}) THEN coalesce(_l_org, _l_any)"
         "       ELSE _l_person END"
         ") ELSE key END"
     )

@@ -10,8 +10,9 @@ The reference unions two extractors over each parsed sentence:
 Ours re-expresses both as deterministic pattern extractors over the
 token/POS/chunk arrays (published ReVerb/Ollie-style patterns:
 relation phrase = V | V W* P with V a verb group, W noun/adj/adv/det,
-P a preposition; arguments = nearest noun-phrase chunks), run inside one
-Arrow-batched ``mapInPandas`` — a narrow stage, no shuffle.
+P a preposition; arguments = nearest noun-phrase chunks), run inside the
+fused ``mapInArrow`` pass (operators/fused.py) — a narrow stage, no
+shuffle.
 
 Multi-arg2 flattening parity (Extraction.scala:35-44): a verb frame with
 trailing prepositional arguments emits one triple per argument, with the
@@ -24,13 +25,6 @@ observable. Ours is a documented deterministic formula (see _confidence).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-
-from .. import schemas
 from .tokenize import CHUNK, LEMMA, POS, START, TOK
 
 _VERB_TAGS = {"VB", "VBD", "VBZ", "VBP", "VBG", "VBN"}
@@ -246,36 +240,3 @@ def extract_sentence(tokens: list[tuple], text: str) -> list[tuple[Part, Part, P
     res = [(a1, r, a2, c, "relnoun") for (a1, r, a2, c) in extract_relnoun(tokens, text)]
     res += [(a1, r, a2, c, "verb") for (a1, r, a2, c) in extract_verbal(tokens, text)]
     return res
-
-
-def triples_raw(parsed: DataFrame) -> DataFrame:
-    """PARSED_SENTENCES → TRIPLES_RAW (narrow mapInPandas); offsets lifted
-    from sentence-local to document-level by adding the sentence offset."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            recs = []
-            for conv_id, turn_idx, sent_num, offset, text, toks in zip(
-                b["conv_id"], b["turn_idx"], b["sent_num"], b["offset"], b["text"], b["tokens"]
-            ):
-                tokens = [
-                    (t["token"], t["start"], t["pos"], t["chunk"], t["lemma"])
-                    for t in toks
-                ]
-                for a1, r, a2, conf, ext in extract_sentence(tokens, text):
-                    recs.append(
-                        (
-                            conv_id, int(turn_idx), int(sent_num),
-                            (a1[0], int(offset) + a1[1]),
-                            (r[0], int(offset) + r[1]),
-                            (a2[0], int(offset) + a2[1]),
-                            conf, ext,
-                        )
-                    )
-            yield pd.DataFrame(
-                recs,
-                columns=["conv_id", "turn_idx", "sent_num", "arg1", "rel", "arg2",
-                         "confidence", "extractor"],
-            ).astype({"turn_idx": "int32", "sent_num": "int32"})
-
-    return parsed.mapInPandas(run, schema=schemas.TRIPLES_RAW)

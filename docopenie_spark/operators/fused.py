@@ -1,4 +1,5 @@
-"""Fused segment+tokenize stage.
+"""The fused NLP pass: segment+filter+tokenize+extract+NER in ONE
+Python worker per task.
 
 Chained ``mapInPandas`` stages each attach their OWN Python worker to the
 task pipeline — a task running segment → tokenize → extract drives three
@@ -6,27 +7,24 @@ Python processes with the JVM relaying Arrow batches between them. At 32
 tasks that is ~100 worker processes and a kernel-level IPC storm (measured:
 36% system time, anti-scaling from local[8] to local[32]).
 
-The fix is architectural, not a config knob: fuse per-sentence work into
-ONE UDF per task pipeline. ``parsed_sentences`` does segmentation (T2),
-the P1 filter, and tokenization (T3) in a single Python worker; the
-pipeline then persists its output, so the downstream extractors (T4/T5)
-and NER (T7/T8) each read columnar cache with exactly one Python hop.
-
-Semantics are identical to operators/segment.py + operators/tokenize.py
-(shared pure-Python cores); a parity test asserts it.
+The fix is architectural, not a config knob: :func:`parse_extract_annotate`
+runs every per-sentence kernel (segment_turn, tokenize_sentence,
+extract_sentence, sentence_entities) inside one ``mapInArrow`` pass, so
+token arrays exist only inside the worker and never cross the Arrow
+boundary. Its combined output is split into sentence, triple and entity
+views by JVM-side filters (:func:`split_sentences`, :func:`split_triples`,
+:func:`split_entities`).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import schemas
 from ..functions import textnorm
 from ..session import content_broadcast
 from .extract import extract_sentence
@@ -39,45 +37,6 @@ def _keep(s: str) -> bool:
     """P1 predicate, python twin of textnorm.sentence_keep (for stripped
     sentence text: #whitespace-runs >= 3 ⇔ #fields >= 4)."""
     return len(s) <= 750 and len(s.split()) >= 4
-
-
-def parsed_sentences(turns_with_offsets: DataFrame, apply_filter: bool = True,
-                     rebalance: bool = True) -> DataFrame:
-    """Segment+tokenize, TURN-scoped. The upstream offset window partitions
-    by conv_id, which strands the hot conversation (10% of all turns) in
-    one partition — a hard single-task floor for the most expensive UDF.
-    Since this stage needs no conv-locality, we rebalance on
-    (conv_id, turn_idx) first: the per-turn hash spreads the hot
-    conversation across every core (the skew-salting required by the
-    north rule, applied where it actually pays)."""
-    src = turns_with_offsets.select(
-        "conv_id",
-        "turn_idx",
-        "turn_offset",
-        textnorm.normalize_inline_ws(textnorm.asciify(F.col("text"))).alias("text"),
-    )
-    if rebalance:
-        src = src.repartition(F.col("conv_id"), F.col("turn_idx"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            recs = []
-            for conv_id, turn_idx, turn_offset, text in zip(
-                b["conv_id"], b["turn_idx"], b["turn_offset"], b["text"]
-            ):
-                for i, (local, s) in enumerate(segment_turn(text)):
-                    if apply_filter and not _keep(s):
-                        continue
-                    recs.append(
-                        (conv_id, turn_idx, i, turn_offset + local, s,
-                         tokenize_sentence(s))
-                    )
-            yield pd.DataFrame(
-                recs,
-                columns=["conv_id", "turn_idx", "sent_num", "offset", "text", "tokens"],
-            ).astype({"turn_idx": "int32", "sent_num": "int32", "offset": "int64"})
-
-    return src.mapInPandas(run, schema=schemas.PARSED_SENTENCES)
 
 
 # ------------------------------------------------- fused extract + NER
@@ -287,62 +246,6 @@ def split_sentences(annotated: DataFrame,
         F.col("e_offset").alias("offset"),
         text.alias("text"),
     )
-
-
-def extract_and_annotate(
-    parsed: DataFrame,
-    first_names: set[str],
-    gazetteer_names: set[str],
-    last_names: set[str] | None = None,
-) -> DataFrame:
-    """T4/T5 extraction AND T7/T8 NER in ONE Python hop over the cached
-    parsed table (round 1 ran them as two separate mapInPandas passes —
-    the token arrays crossed the Arrow boundary twice). Output rows are
-    discriminated by ``row_kind`` ('t' = triple, 'e' = entity/pronoun);
-    :func:`split_triples` / :func:`split_entities` are JVM-side filters
-    over the persisted combined table."""
-    sc = parsed.sparkSession.sparkContext
-    b_first = content_broadcast(sc, frozenset(first_names))
-    b_gaz = content_broadcast(sc, frozenset(gazetteer_names))
-    b_last = content_broadcast(sc, frozenset(last_names or ()))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        firsts, gaz, lasts = b_first.value, b_gaz.value, b_last.value
-        for b in batches:
-            recs = []
-            for conv_id, turn_idx, sent_num, offset, text, toks in zip(
-                b["conv_id"], b["turn_idx"], b["sent_num"],
-                b["offset"], b["text"], b["tokens"]
-            ):
-                tokens = [
-                    (t["token"], t["start"], t["pos"], t["chunk"], t["lemma"])
-                    for t in toks
-                ]
-                off = int(offset)
-                for a1, r, a2, conf, ext in extract_sentence(tokens, text):
-                    recs.append((
-                        conv_id, "t", int(turn_idx), int(sent_num),
-                        (a1[0], off + a1[1]),
-                        (r[0], off + r[1]),
-                        (a2[0], off + a2[1]),
-                        conf, ext, None, None, None, None, None,
-                    ))
-                for e_text, e_off, e_name, e_type in sentence_entities(
-                    tokens, text, off, firsts, gaz, lasts, True
-                ):
-                    recs.append((
-                        conv_id, "e", int(turn_idx), int(sent_num),
-                        None, None, None, None, None,
-                        e_text, int(e_off), None, e_name, e_type,
-                    ))
-            yield pd.DataFrame(
-                recs,
-                columns=["conv_id", "row_kind", "turn_idx", "sent_num",
-                         "arg1", "rel", "arg2", "confidence", "extractor",
-                         "e_text", "e_offset", "e_len", "e_name", "e_type"],
-            )
-
-    return parsed.mapInPandas(run, schema=ANNOTATED)
 
 
 def split_triples(annotated: DataFrame) -> DataFrame:

@@ -4,10 +4,11 @@ prep/KbpSentenceParser.scala:37-61 and repr/document/ParsedDocument.scala:74-94)
 The reference uses OpenNLP chunker + ClearNLP parser + Morpha lemmatizer
 (library models, not in its repo). We implement a deterministic
 rule-based tagger/chunker with the coarse distinctions the extractors
-need (verb groups, noun phrases, prepositions). It runs as an
-Arrow-batched ``mapInPandas`` — the Spark-native replacement for the
-reference's grouped(100) + .par thread pool + ThreadLocal models
-(prep/KbpSentenceParser.scala:26-31,73-76; SURVEY.md §3 EP2).
+need (verb groups, noun phrases, prepositions). It runs inside the
+fused ``mapInArrow`` pass (operators/fused.py) — the Spark-native
+replacement for the reference's grouped(100) + .par thread pool +
+ThreadLocal models (prep/KbpSentenceParser.scala:26-31,73-76; SURVEY.md
+§3 EP2).
 
 Invariant kept from the reference (prep/ParsedKbpSentence.scala:18):
 every token carries its char ``start`` in the sentence, and the chunk
@@ -17,13 +18,6 @@ array is aligned 1:1 with the token array.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-
-from .. import schemas
 
 _TOKEN_RE = re.compile(r"[A-Za-z0-9]+(?:['’][A-Za-z]+)?|[^\sA-Za-z0-9]")
 
@@ -205,15 +199,3 @@ def tokenize_sentence(text: str) -> list[tuple]:
     chunks = _chunk(tags, words)
     assert len(chunks) == len(words)  # ParsedKbpSentence.scala:18 invariant
     return list(zip(words, starts, tags, chunks, lemmas))
-
-
-def parsed_sentences(sent_df: DataFrame) -> DataFrame:
-    """SENTENCES → PARSED_SENTENCES via Arrow-batched mapInPandas (narrow)."""
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            b = b.copy()
-            b["tokens"] = [tokenize_sentence(t) for t in b["text"]]
-            yield b
-
-    return sent_df.mapInPandas(parse, schema=schemas.PARSED_SENTENCES)

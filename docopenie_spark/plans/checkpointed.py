@@ -8,21 +8,23 @@ buckets it finished, and the next invocation recomputes ONLY missing
 buckets per stage (anti-join of buckets against lineage). Stage inputs
 are filtered with the same bucket predicate so partially-complete stages
 compose: bucket b of `triples` only ever derives from bucket b of
-`parsed` (conv_id-functional bucketing guarantees alignment).
+`annotated` (conv_id-functional bucketing guarantees alignment).
+
+The stages are those of the one KG stage graph (plans/pipeline.py
+``_stage_graph``), each materialized by :func:`_resumable`.
 """
 
 from __future__ import annotations
 
 import time
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import datagen
-from ..operators import assembly, bestmention, coref, fused, link, ner, substitute
 from ..sources.checkpoints import BUCKET_COL, StageStore, schema_fingerprint, with_bucket
-from .pipeline import default_dictionaries
+from .pipeline import COREF_HOT_THRESHOLD, _stage_graph
 
 
 def _resumable(store: StageStore, stage: str, inputs: list[DataFrame], fn,
@@ -56,50 +58,16 @@ def run_checkpointed(
     run_id: str | None = None,
 ) -> DataFrame:
     """Full pipeline with per-stage checkpoint/lineage/metrics; returns the
-    final triples table (read from its checkpoint)."""
-    run_id = run_id or uuid.uuid4().hex[:12]
-    first_names, gaz_names, last_names = default_dictionaries()
-    gaz_rows = datagen.gazetteer_rows()
-    entity_dict = datagen.entity_dict_df(spark)
+    final triples table (read from its checkpoint).
 
-    chunks = _resumable(
-        store, "doc_chunks", [transcripts], lambda t: assembly.doc_chunks(t), run_id
-    )
-    annotated = _resumable(
-        store, "annotated", [transcripts],
-        lambda t: fused.parse_extract_annotate(
-            assembly.with_turn_offsets(t), first_names, gaz_names, last_names
-        ),
-        run_id,
-    )
-    # sentence rows (no tokens); text reconstructed from the turn table
-    parsed = fused.split_sentences(annotated, assembly.with_turn_offsets(transcripts))
-    triples_raw = fused.split_triples(annotated)
-    mentions = fused.split_entities(annotated)
-    clusters = _resumable(
-        store, "clusters", [mentions], lambda m: coref.clusters(m), run_id
-    )
-    links = _resumable(
-        store, "links", [triples_raw, clusters, parsed],
-        lambda tr, c, p: link.links(
-            tr, entity_dict, clusters=c,
-            sentences=p.select("conv_id", "turn_idx", "sent_num", "offset", "text"),
-        ),
-        run_id,
-    )
-    bems = _resumable(
-        store, "best_mentions", [mentions, chunks],
-        lambda m, d: bestmention.best_mentions(ner.split_mentions(m)[0], d, gaz_rows),
-        run_id,
-    )
-    bems_x = _resumable(
-        store, "best_mentions_expanded", [bems, clusters, links],
-        lambda b, c, l: bestmention.expand_with_coref(b, c, l), run_id,
-    )
-    triples = _resumable(
-        store, "triples", [triples_raw, bems_x],
-        lambda tr, b: substitute.substituted_triples(tr, bestmention.display_filter(b)),
-        run_id,
-    )
+    Sentence rows are always slim (no inline text; the turns join
+    rebuilds it): the schema fingerprint is the same either way, so a
+    stage written with the other setting would go unnoticed and read as
+    null sentence text."""
+    run_id = run_id or uuid.uuid4().hex[:12]
+    triples = _stage_graph(
+        spark, transcripts, partial(_resumable, store, run_id=run_id),
+        slim=True, hot_threshold=COREF_HOT_THRESHOLD,
+    )["triples"]
     store.record_metric(run_id, "triples", "row_count", triples.count())
     return triples

@@ -1,18 +1,21 @@
 """End-to-end pipeline DAG (SURVEY.md §3 EP1 Spark equivalent):
 
-transcripts → turns+offsets → sentences → parsed → [triples_raw ∥
-entities ∥ clusters] → links → best_mentions → best_mentions_expanded →
-substituted triples.
+transcripts → turns+offsets → fused NLP pass (annotated) → [sentences ∥
+triples_raw ∥ mentions] → clusters → links → best_mentions →
+best_mentions_expanded → substituted triples.
 
-``run_pipeline`` builds the lazy DAG and returns every stage DataFrame;
-callers checkpoint whichever stages they want via sources/checkpoints.py
-(the reference's serialized-doc two-phase design, main/KbpDocSerializer.scala,
-becomes per-stage tables + lineage).
+The graph is defined once (:func:`_stage_graph`) and interpreted by two
+runners: ``run_pipeline`` builds the lazy DAG with its fan-out points
+persisted and returns every stage DataFrame; ``run_checkpointed``
+(plans/checkpointed.py) writes each stage to a bucketed, resumable store
+(the reference's serialized-doc two-phase design,
+main/KbpDocSerializer.scala, becomes per-stage tables + lineage).
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,7 +32,6 @@ class PipelineResult:
     turns: DataFrame
     docs: DataFrame
     sentences: DataFrame
-    parsed: DataFrame
     triples_raw: DataFrame
     entities: DataFrame
     mentions: DataFrame
@@ -146,15 +148,118 @@ def _slim_sentences(transcripts: DataFrame, slim: bool | None) -> bool:
     return _input_stats(transcripts)[0] >= SLIM_SENTENCE_THRESHOLD
 
 
-def default_dictionaries() -> tuple[set[str], set[str], set[str]]:
+def default_dictionaries(
+    gazetteer_rows: list[tuple] | None = None,
+) -> tuple[set[str], set[str], set[str]]:
     """(first_names, gazetteer_names, last_names) from the synthesized
     dimension data — the stand-ins for the reference's model/gazetteer
-    files under /scratch (BestEntityMentionFinder.scala:556-582)."""
+    files under /scratch (BestEntityMentionFinder.scala:556-582). The
+    names of a caller's ``gazetteer_rows`` join the default gazetteer
+    names."""
     first_names = {p[0] for p in datagen.PERSONS}
     last_names = {p[1] for p in datagen.PERSONS}
     rows = datagen.gazetteer_rows()
     gaz_names = {r[0] for r in rows} | {r[4] for r in rows if len(r) > 4 and r[4]}
+    gaz_names |= {r[0] for r in gazetteer_rows or ()}
     return first_names, gaz_names, last_names
+
+
+def _fused_pass(turns: DataFrame, gazetteer_rows: list[tuple] | None,
+                slim: bool) -> DataFrame:
+    """segment+tokenize+extract+NER in ONE Python pass over the turn table
+    (operators/fused.parse_extract_annotate): token arrays never cross
+    the Arrow boundary. rebalance off: the salted turn-offset join
+    already partitions on (conv_id, salt), balanced even for the hot
+    conversation. ``slim`` 's' rows carry no inline sentence text."""
+    return fused.parse_extract_annotate(
+        turns, *default_dictionaries(gazetteer_rows), rebalance=False,
+        emit_sentence_text=not slim,
+    )
+
+
+# run_pipeline persists these stages of the graph (plus the raw input):
+# the fan-out points — annotated feeds the sentence/triple/mention
+# splits, clusters feeds links and the coref expansion, and all four
+# are read again by callers through PipelineResult. doc_chunks is not
+# persisted (r7): best_mentions is its only consumer, so a persist only
+# paid cache build + CacheManager plan canonicalization for a single
+# read; the persisted transcripts underneath keep the rebuild cheap.
+_PERSISTED_STAGES = frozenset({"annotated", "clusters", "links", "best_mentions"})
+
+
+def _stage_graph(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    materialize: Callable[[str, list, Callable], DataFrame],
+    *,
+    slim: bool,
+    hot_threshold: int | None,
+    gazetteer_rows: list[tuple] | None = None,
+    entity_dict: DataFrame | None = None,
+    annotated: DataFrame | None = None,
+    with_linking: bool = True,
+    with_coref_expansion: bool = True,
+) -> dict[str, DataFrame | None]:
+    """The KG stage graph, defined once for both runners: turn offsets →
+    fused NLP pass → sentence/triple/mention splits → coref clusters →
+    links → best_mentions → coref expansion → substitution.
+
+    Each named stage (``doc_chunks``, ``annotated``, ``clusters``,
+    ``links``, ``best_mentions``, ``best_mentions_expanded``,
+    ``triples``) is handed to ``materialize(name, inputs, fn)``, which
+    returns the stage's table built by ``fn(*inputs)``. Every input is
+    conv_id-keyed, so a materializer may filter them by conversation
+    bucket. A supplied ``annotated`` table skips the fused pass. Returns
+    the PipelineResult stage fields by name."""
+    gaz_rows = gazetteer_rows if gazetteer_rows is not None else datagen.gazetteer_rows()
+    turns = assembly.with_turn_offsets(transcripts)
+    # the rule engine consumes BOUNDED chunks — the hot conversation
+    # never materializes as one row (assembly.doc_chunks)
+    chunks = materialize("doc_chunks", [transcripts], assembly.doc_chunks)
+    if annotated is None:
+        annotated = materialize(
+            "annotated", [turns], lambda t: _fused_pass(t, gazetteer_rows, slim)
+        )
+    # slim: sentence text reconstructed JVM-side from the turn table (the
+    # 's' rows carry only offset+length); otherwise the text rode inline
+    # through Arrow and no join is needed. Sentences, triples and
+    # mentions are JVM filters over the combined table.
+    sentences = fused.split_sentences(annotated, turns if slim else None)
+    triples_raw = fused.split_triples(annotated)
+    mentions = fused.split_entities(annotated)
+    entities = ner.split_mentions(mentions)[0]
+    clusters = materialize(
+        "clusters", [mentions],
+        lambda m: coref.clusters(m, hot_threshold=hot_threshold),
+    )
+    links = None
+    if with_linking:
+        ed = entity_dict if entity_dict is not None else datagen.entity_dict_df(spark)
+        # T9/T10: doc_sim scores against coref-extended arg context
+        links = materialize(
+            "links", [triples_raw, clusters, sentences],
+            lambda tr, c, s: link.links(tr, ed, clusters=c, sentences=s),
+        )
+    bems = materialize(
+        "best_mentions", [entities, chunks],
+        lambda e, c: bestmention.best_mentions(e, c, gaz_rows),
+    )
+    bems_x = bems
+    if with_coref_expansion:
+        bems_x = materialize(
+            "best_mentions_expanded", [bems, clusters, links],
+            bestmention.expand_with_coref,
+        )
+    triples = materialize(
+        "triples", [triples_raw, bems_x],
+        lambda tr, b: substitute.substituted_triples(tr, bestmention.display_filter(b)),
+    )
+    return {
+        "turns": turns, "sentences": sentences, "triples_raw": triples_raw,
+        "entities": entities, "mentions": mentions, "clusters": clusters,
+        "links": links, "best_mentions": bems, "best_mentions_expanded": bems_x,
+        "triples": triples,
+    }
 
 
 def annotate(
@@ -194,17 +299,10 @@ def annotate(
                 _hit.persist(getattr(StorageLevel, storage_level))
             return _hit
 
-    gaz_rows = gazetteer_rows if gazetteer_rows is not None else datagen.gazetteer_rows()
-    first_names, gaz_names, last_names = default_dictionaries()
-    gaz_names |= {r[0] for r in gaz_rows}
     slim = _slim_sentences(transcripts, slim_sentences)
     if fabricate_metadata:
         transcripts = assembly.fabricated_metadata_turns(transcripts)
-    out = fused.parse_extract_annotate(
-        assembly.with_turn_offsets(transcripts),
-        first_names, gaz_names, last_names, rebalance=False,
-        emit_sentence_text=not slim,
-    )
+    out = _fused_pass(assembly.with_turn_offsets(transcripts), gazetteer_rows, slim)
     # Record the resolved slim decision IN the annotated schema (ADVICE
     # r4 / VERDICT r5 #2): run_pipeline(annotated=) must join sentence
     # text back exactly when this pass omitted it — re-deriving the
@@ -214,11 +312,10 @@ def annotate(
     # decision governs) travels through filter/select/persist on any
     # DERIVED DataFrame — the round-5 Python attribute survived only
     # the exact returned object and silently fell back after any
-    # transformation. The attribute is kept as a legacy fallback.
+    # transformation.
     out = out.withMetadata("e_text", {"docopenie_slim": slim})
     if cache:
         out = out.persist(getattr(StorageLevel, storage_level))
-    out._docopenie_slim = slim
     if _plan_cache_enabled():
         _plan_cache_put(spark, (transcripts,), _ck_scalars, out)
     return out
@@ -238,9 +335,8 @@ def run_pipeline(
     slim_sentences: bool | None = None,
     coref_hot_threshold: int | None | str = "auto",
 ) -> PipelineResult:
-    """Build the full DAG. With cache=True the fan-out points (parsed
-    sentences feed BOTH extraction and NER; triples_raw feeds linking AND
-    substitution) are persisted so shared prefixes compute once — the
+    """Build the full DAG. With cache=True the fan-out points (see
+    ``_PERSISTED_STAGES``) are persisted so shared prefixes compute once — the
     Spark analogue of the reference's lazy-val memoization per document
     (SURVEY.md §4 row 1). At cluster scale these become checkpoint tables
     (sources/checkpoints.py) instead of memory.
@@ -277,9 +373,6 @@ def run_pipeline(
                     _df.persist(_lvl)
             return _hit
 
-    gaz_rows = gazetteer_rows if gazetteer_rows is not None else datagen.gazetteer_rows()
-    first_names, gaz_names, last_names = default_dictionaries()
-    gaz_names |= {r[0] for r in gaz_rows}
     # size-adaptive decisions (see SLIM_SENTENCE_THRESHOLD /
     # COREF_HOT_THRESHOLD above), resolved from ONE cheap job over the
     # RAW input — skipped entirely when the caller passes both
@@ -290,14 +383,11 @@ def run_pipeline(
     # (ADVICE r4): trust the marker over re-derivation — the fused pass
     # either emitted inline sentence text or it did not, and only the
     # producer knows. An explicit contradictory flag is a caller bug.
-    # Resolution order: e_text column METADATA (travels through any
-    # derived DataFrame — VERDICT r5 #2), then the legacy Python
-    # attribute (exact-object only), then re-derivation.
+    # The marker is e_text column METADATA, which travels through any
+    # derived DataFrame (VERDICT r5 #2); without it, re-derive.
     ann_slim = None
     if annotated is not None and "e_text" in annotated.columns:
         ann_slim = annotated.schema["e_text"].metadata.get("docopenie_slim")
-    if ann_slim is None:
-        ann_slim = getattr(annotated, "_docopenie_slim", None)
     if ann_slim is not None:
         if slim_sentences is not None and slim_sentences != ann_slim:
             raise ValueError(
@@ -329,6 +419,10 @@ def run_pipeline(
             persisted.append(df)
         return df
 
+    def _materialize(name: str, inputs: list, fn: Callable) -> DataFrame:
+        df = fn(*inputs)
+        return _p(df) if name in _PERSISTED_STAGES else df
+
     if fabricate_metadata:
         # S6: role/ts metadata becomes mention-bearing fabricated turns
         transcripts = assembly.fabricated_metadata_turns(transcripts)
@@ -341,67 +435,16 @@ def run_pipeline(
     # chosen a level (persist with a different level raises).
     if cache and transcripts.storageLevel == StorageLevel.NONE:
         transcripts = _p(transcripts)
-    turns = assembly.with_turn_offsets(transcripts)
-    docs = assembly.doc_text_salted(transcripts)  # full strings: tests/queries only
-    # the rule engine consumes BOUNDED chunks — the hot conversation never
-    # materializes as one row (assembly.doc_chunks). Not persisted (r7):
-    # best_mentions is its only consumer, so a persist only paid cache
-    # build + CacheManager plan canonicalization for a single read; the
-    # persisted transcripts underneath keep the rebuild cheap.
-    chunks = assembly.doc_chunks(transcripts)
-    # segment+tokenize+extract+NER in ONE Python pass over the turn table
-    # (operators/fused.parse_extract_annotate): token arrays never cross
-    # the Arrow boundary — measured, the Arrow transfer itself scales at
-    # ~0.34 efficiency, so bulk python passes are minimized. rebalance
-    # off: the salted turn-offset join already partitions on (conv_id,
-    # salt), balanced even for the hot conversation. Sentences, triples
-    # and entities are JVM filters over the persisted combined table.
-    if annotated is None:
-        annotated = _p(fused.parse_extract_annotate(
-            turns, first_names, gaz_names, last_names, rebalance=False,
-            emit_sentence_text=not slim,
-        ))
-    # slim: sentence text reconstructed JVM-side from the turn table (the
-    # 's' rows carry only offset+length); below the threshold the text
-    # rode inline through Arrow and no join is needed
-    sents = fused.split_sentences(annotated, turns if slim else None)
-    triples_raw = fused.split_triples(annotated)
-    mentions = fused.split_entities(annotated)
-    # parsed (with token arrays) is API surface only — built on demand,
-    # not part of the executed DAG
-    parsed = fused.parsed_sentences(turns)
-    ents, _prons = ner.split_mentions(mentions)
-    cl = _p(coref.clusters(mentions, hot_threshold=hot_thr))
-
-    lk = None
-    if with_linking:
-        ed = entity_dict if entity_dict is not None else datagen.entity_dict_df(spark)
-        # T9/T10: doc_sim scores against coref-extended arg context
-        lk = _p(link.links(triples_raw, ed, clusters=cl, sentences=sents))
-
-    bems = _p(bestmention.best_mentions(ents, chunks, gaz_rows))
-    if with_coref_expansion:
-        bems_x = bestmention.expand_with_coref(bems, cl, lk)
-    else:
-        bems_x = bems
-
-    triples = substitute.substituted_triples(
-        triples_raw, bestmention.display_filter(bems_x)
+    stages = _stage_graph(
+        spark, transcripts, _materialize, slim=slim, hot_threshold=hot_thr,
+        gazetteer_rows=gazetteer_rows, entity_dict=entity_dict,
+        annotated=annotated, with_linking=with_linking,
+        with_coref_expansion=with_coref_expansion,
     )
-
     result = PipelineResult(
-        turns=turns,
-        docs=docs,
-        sentences=sents,
-        parsed=parsed,
-        triples_raw=triples_raw,
-        entities=ents,
-        mentions=mentions,
-        clusters=cl,
-        links=lk,
-        best_mentions=bems,
-        best_mentions_expanded=bems_x,
-        triples=triples,
+        # full doc strings: tests/queries only
+        docs=assembly.doc_text_salted(transcripts),
+        **stages,
         extras={"persisted": persisted},
     )
     if _plan_cache_enabled():

@@ -6,7 +6,6 @@ StructTypes declared once here — no schema inference anywhere.
 Reference mapping (file:line refer to /root/reference/src/main/scala/edu/knowitall/):
 - TRANSCRIPTS      ← the KBP corpus file rows (BASELINE.json input_hint)
 - SENTENCES        ← KbpSentence             (prep/KbpSentence.scala:3-5)
-- PARSED_SENTENCES ← ParsedKbpSentence       (prep/ParsedKbpSentence.scala:9-18)
 - TRIPLES_RAW      ← Extraction              (repr/extraction/Extraction.scala:15-26)
 - ENTITIES         ← Entity                  (repr/bestmention/BestMention.scala:24-28)
 - CLUSTERS         ← MentionCluster          (repr/coref/Mention.scala:9-12)
@@ -58,27 +57,6 @@ SENTENCES = StructType(
         StructField("sent_num", IntegerType(), False),  # 0-based within conversation
         StructField("offset", LongType(), False),  # char offset in assembled doc text
         StructField("text", StringType(), False),
-    ]
-)
-
-TOKEN = StructType(
-    [
-        StructField("token", StringType(), False),
-        StructField("start", IntegerType(), False),  # char offset within the sentence
-        StructField("pos", StringType(), False),
-        StructField("chunk", StringType(), False),
-        StructField("lemma", StringType(), False),
-    ]
-)
-
-PARSED_SENTENCES = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("turn_idx", IntegerType(), False),
-        StructField("sent_num", IntegerType(), False),
-        StructField("offset", LongType(), False),
-        StructField("text", StringType(), False),
-        StructField("tokens", ArrayType(TOKEN, False), False),
     ]
 )
 

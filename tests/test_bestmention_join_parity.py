@@ -28,9 +28,8 @@ def test_join_based_chunked_equals_python_full_doc(spark):
     simultaneously the distinct-name-join parity test AND the doc-chunking
     parity test (boundary matches found exactly once)."""
     t = datagen.transcripts_df(spark, 400)
-    parsed = fused.parsed_sentences(assembly.with_turn_offsets(t))
-    fn, gz, ln = default_dictionaries()
-    ents = ner.split_mentions(ner.entities(parsed, fn, gz, ln))[0].cache()
+    ann = fused.parse_extract_annotate(assembly.with_turn_offsets(t), *default_dictionaries())
+    ents = ner.split_mentions(fused.split_entities(ann))[0].cache()
     docs = assembly.doc_text_salted(t).cache()
     # tiny chunks (group=4 turns) force many boundaries on the fixture
     chunks = assembly.doc_chunks(t, group=4).cache()

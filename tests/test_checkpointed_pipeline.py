@@ -13,12 +13,23 @@ def _norm(df):
 
 
 def test_checkpointed_equals_in_memory(spark, tmp_path):
+    """Both runners interpret the same stage graph: the final triples AND
+    every intermediate checkpointed stage match run_pipeline's stage."""
     t = datagen.transcripts_df(spark, 160)
-    fresh = _norm(run_pipeline(spark, t).triples)
+    r = run_pipeline(spark, t)
+    fresh = _norm(r.triples)
     store = StageStore(spark, str(tmp_path / "cp"), buckets=4)
     cp = _norm(run_checkpointed(spark, t, store, run_id="r1"))
     assert cp.exceptAll(fresh).isEmpty()
     assert fresh.exceptAll(cp).isEmpty()
+    for stage, want in [("clusters", r.clusters), ("links", r.links),
+                        ("best_mentions", r.best_mentions),
+                        ("best_mentions_expanded", r.best_mentions_expanded)]:
+        got = store.read_stage(stage)
+        assert got.schema.simpleString() == want.schema.simpleString(), stage
+        assert got.count() == want.count() > 0, stage
+        assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty(), stage
+    r.unpersist()
 
 
 def test_mid_run_kill_then_resume(spark, tmp_path):

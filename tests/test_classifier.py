@@ -57,6 +57,21 @@ def test_feature_columns_and_values(bems, empty_clusters):
     assert ci.f_is_coref == 1.0 and ci.f_is_coref_identity == 1.0 and ci.f_is_linked == 0.0
 
 
+def test_gazetteer_name_with_apostrophe(spark, empty_clusters):
+    """Gazetteer names reach the feature SQL as string literals; a quote
+    in a caller-supplied name must be escaped, not end the literal."""
+    gaz = GAZ + [("Coeur d'Alene", "CITY", "Idaho", "PROVINCE", None)]
+    bems = spark.createDataFrame(
+        [_bem("c1", "container", "Coeur d'Alene", 0, "LOCATION",
+              "Coeur d'Alene, Massachusetts",
+              ce=("Massachusetts", 20, "Massachusetts", "LOCATION"))],
+        schemas.BEST_MENTIONS,
+    )
+    (r,) = clf.bem_features(bems, empty_clusters, gaz).collect()
+    assert r.f_location_ambiguity_count == 1.0  # a gazetteer city
+    assert r.f_state_contains_city == 1.0
+
+
 def test_coref_cluster_agrees(spark, bems):
     # ref :66-82: clusters touching the target span vs the best-entity
     # span → 1 on shared cluster, -1 when best side has only foreign ones

@@ -3,7 +3,7 @@
 import pandas as pd
 
 from docopenie_spark import datagen
-from docopenie_spark.operators import assembly, coref, ner, segment, tokenize
+from docopenie_spark.operators import assembly, coref, fused, ner
 
 FIRSTS = {p[0] for p in datagen.PERSONS}
 LASTS = {p[1] for p in datagen.PERSONS}
@@ -19,8 +19,8 @@ def _entities(spark, turns):
     from docopenie_spark import schemas
 
     df = spark.createDataFrame(rows, schema=schemas.TRANSCRIPTS)
-    parsed = tokenize.parsed_sentences(segment.sentences(assembly.with_turn_offsets(df)))
-    return ner.entities(parsed, FIRSTS, GAZ, LASTS)
+    ann = fused.parse_extract_annotate(assembly.with_turn_offsets(df), FIRSTS, GAZ, LASTS)
+    return fused.split_entities(ann)
 
 
 def test_entity_spans_and_types(spark):

@@ -52,7 +52,6 @@ def main():
         (fused, "split_sentences"),
         (fused, "split_triples"),
         (fused, "split_entities"),
-        (fused, "parsed_sentences"),
         (ner, "split_mentions"),
         (coref, "clusters"),
         (link, "links"),

@@ -1635,10 +1635,10 @@ def _q_kg_end_to_end(spark, sf_dir):
     for pat, rep in _E2E_INJECT:
         c = F.regexp_replace(c, pat, rep)
     t = derived_from_documents(docs.withColumn("text", c))
-    # cache=True (r7): with cache=False the fused Arrow pass re-executed
-    # once per fan-out reference inside the triples DAG; the persisted
-    # fan-out points compute it once (same leak profile as the other
-    # run_pipeline-based queries in this file)
+    # run_pipeline persists its fan-out points (r7): unpersisted, the
+    # fused Arrow pass re-executed once per fan-out reference inside the
+    # triples DAG; persisted, it computes once (same leak profile as the
+    # other run_pipeline-based queries in this file)
     r = run_pipeline(spark, t)
     return r.triples.select(
         "conv_id", "turn_idx", "sent_num", "subj", "pred", "obj",

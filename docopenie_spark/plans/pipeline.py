@@ -14,9 +14,8 @@ main/KbpDocSerializer.scala, becomes per-stage tables + lineage).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,7 +29,6 @@ from ..operators import (
 @dataclass
 class PipelineResult:
     turns: DataFrame
-    docs: DataFrame
     sentences: DataFrame
     triples_raw: DataFrame
     entities: DataFrame
@@ -40,15 +38,15 @@ class PipelineResult:
     best_mentions: DataFrame
     best_mentions_expanded: DataFrame
     triples: DataFrame
-    extras: dict = field(default_factory=dict)
+    persisted: list[DataFrame]
 
     def unpersist(self, blocking: bool = False) -> None:
         """Release every DataFrame run_pipeline persisted (the fan-out
-        points live in ``extras["persisted"]``). Call once downstream
-        results are materialized — a long-lived session running many
-        pipeline variants leaks executor storage otherwise (VERDICT r3
-        #4: eval_diff's shared annotate() output was never freed)."""
-        for df in self.extras.get("persisted", []):
+        points). Call once downstream results are materialized — a
+        long-lived session running many pipeline variants leaks executor
+        storage otherwise (VERDICT r3 #4: eval_diff's shared annotate()
+        output was never freed)."""
+        for df in self.persisted:
             df.unpersist(blocking)
 
 
@@ -74,57 +72,6 @@ SLIM_SENTENCE_THRESHOLD = 1 << 20
 # never a wrong row).
 COREF_HOT_THRESHOLD = 1 << 22
 COREF_MENTIONS_PER_TURN_BOUND = 16
-
-
-# --------------------------------------------------------------- plan cache
-#
-# Round 7: callers re-invoke run_pipeline with semantically identical
-# inputs — bench.py rebuilds the DAG every timed repeat, and a query
-# sweep builds it once per kg query — and every rebuild pays ~2.4 s of
-# driver time for the IDENTICAL analyzed DAG (measured: ~1.2 s Catalyst
-# rule time — DeduplicateRelations / ResolveReferences / the optimizer
-# runs behind each persist() — plus py4j and expression parsing; see
-# OPTIMIZATION_r07.md). This cache memoizes the constructed
-# PipelineResult — LAZY PLANS ONLY, never rows: a hit re-applies the
-# persist() registrations (the previous caller's unpersist() dropped
-# them), so every materialization still computes from the parquet /
-# generator inputs exactly as a fresh build would. Keyed on the Spark
-# session, every scalar argument, and SEMANTIC equality of every input
-# DataFrame plan (Dataset.sameSemantics — canonicalized-plan equality,
-# no false positives; the hash-free linear scan is fine at this size).
-# Kill-switch: SPARK_GRAFT_PLAN_CACHE=0.
-_PLAN_CACHE: list[tuple] = []
-_PLAN_CACHE_MAX = 16  # annotate() entries share the list with run_pipeline's
-
-
-def _plan_cache_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_PLAN_CACHE", "1") != "0"
-
-
-def _same_df(a: DataFrame | None, b: DataFrame | None) -> bool:
-    if a is None or b is None:
-        return a is b
-    if a is b:
-        return True
-    try:
-        return a.sameSemantics(b)
-    except Exception:
-        return False
-
-
-def _plan_cache_get(spark, dfs, scalars):
-    for spark0, dfs0, scalars0, result in _PLAN_CACHE:
-        if spark0 is not spark or scalars0 != scalars:
-            continue
-        if all(_same_df(a, b) for a, b in zip(dfs0, dfs)):
-            return result
-    return None
-
-
-def _plan_cache_put(spark, dfs, scalars, result) -> None:
-    _PLAN_CACHE.append((spark, dfs, scalars, result))
-    if len(_PLAN_CACHE) > _PLAN_CACHE_MAX:
-        del _PLAN_CACHE[0]
 
 
 def _input_stats(transcripts: DataFrame) -> tuple[int, int]:
@@ -267,8 +214,6 @@ def annotate(
     transcripts: DataFrame,
     gazetteer_rows: list[tuple] | None = None,
     fabricate_metadata: bool = False,
-    cache: bool = True,
-    storage_level: str = "MEMORY_AND_DISK",
     slim_sentences: bool | None = None,
 ) -> DataFrame:
     """The fused segment+tokenize+extract+NER pass alone, persisted —
@@ -278,26 +223,9 @@ def annotate(
     output; only linking/expansion differ). ``slim_sentences`` defaults
     to the same size-adaptive decision run_pipeline makes over the same
     input, so the shared table always matches the downstream path.
-
-    Plan-cached like :func:`run_pipeline` (lazy plan only, never rows):
-    a semantically identical invocation returns the SAME DataFrame, so
-    downstream plan-cache keys short-circuit on object identity and the
-    eager ``_input_stats`` sizing job is not re-run. A hit whose persist
-    was dropped by a caller's unpersist() re-registers EMPTY."""
+    Every call builds a new plan from the ``transcripts`` it is given;
+    reuse across calls is the caller's, by holding the returned table."""
     from pyspark import StorageLevel
-
-    _ck_scalars = (
-        "annotate", fabricate_metadata, cache, storage_level,
-        slim_sentences,
-        None if gazetteer_rows is None
-        else tuple(tuple(r) for r in gazetteer_rows),
-    )
-    if _plan_cache_enabled():
-        _hit = _plan_cache_get(spark, (transcripts,), _ck_scalars)
-        if _hit is not None:
-            if cache and _hit.storageLevel == StorageLevel.NONE:
-                _hit.persist(getattr(StorageLevel, storage_level))
-            return _hit
 
     slim = _slim_sentences(transcripts, slim_sentences)
     if fabricate_metadata:
@@ -314,11 +242,7 @@ def annotate(
     # the exact returned object and silently fell back after any
     # transformation.
     out = out.withMetadata("e_text", {"docopenie_slim": slim})
-    if cache:
-        out = out.persist(getattr(StorageLevel, storage_level))
-    if _plan_cache_enabled():
-        _plan_cache_put(spark, (transcripts,), _ck_scalars, out)
-    return out
+    return out.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def run_pipeline(
@@ -329,17 +253,18 @@ def run_pipeline(
     with_linking: bool = True,
     with_coref_expansion: bool = True,
     fabricate_metadata: bool = False,
-    cache: bool = True,
     annotated: DataFrame | None = None,
     storage_level: str = "MEMORY_AND_DISK",
     slim_sentences: bool | None = None,
     coref_hot_threshold: int | None | str = "auto",
 ) -> PipelineResult:
-    """Build the full DAG. With cache=True the fan-out points (see
-    ``_PERSISTED_STAGES``) are persisted so shared prefixes compute once — the
-    Spark analogue of the reference's lazy-val memoization per document
-    (SURVEY.md §4 row 1). At cluster scale these become checkpoint tables
-    (sources/checkpoints.py) instead of memory.
+    """Build the full DAG from the DataFrames given. The fan-out points
+    (see ``_PERSISTED_STAGES``) are persisted so shared prefixes compute
+    once — the Spark analogue of the reference's lazy-val memoization per
+    document (SURVEY.md §4 row 1). At cluster scale these become
+    checkpoint tables (sources/checkpoints.py) instead of memory. Nothing
+    is memoized across calls: a caller that rebuilds holds its
+    PipelineResult instead.
 
     ``annotated`` (from :func:`annotate` over the SAME transcripts and
     fabrication setting) skips the fused Python pass — callers running
@@ -351,27 +276,6 @@ def run_pipeline(
     pass "DISK_ONLY" — serialized spill, bounded heap (the executor-mode
     scaling protocol does; VERDICT r2 #1a)."""
     from pyspark import StorageLevel
-
-    # plan cache (see header above): a semantically identical invocation
-    # returns the already-ANALYZED lazy DAG; the persist() registrations
-    # are re-applied so the data story is untouched — caches dropped by
-    # a previous unpersist() re-register empty and every action
-    # recomputes from the inputs.
-    _ck_scalars = (
-        with_linking, with_coref_expansion, fabricate_metadata, cache,
-        storage_level, slim_sentences, coref_hot_threshold,
-        None if gazetteer_rows is None
-        else tuple(tuple(r) for r in gazetteer_rows),
-    )
-    _ck_dfs = (transcripts, entity_dict, annotated)
-    if _plan_cache_enabled():
-        _hit = _plan_cache_get(spark, _ck_dfs, _ck_scalars)
-        if _hit is not None:
-            _lvl = getattr(StorageLevel, storage_level)
-            for _df in _hit.extras.get("persisted", []):
-                if _df.storageLevel == StorageLevel.NONE:
-                    _df.persist(_lvl)
-            return _hit
 
     # size-adaptive decisions (see SLIM_SENTENCE_THRESHOLD /
     # COREF_HOT_THRESHOLD above), resolved from ONE cheap job over the
@@ -414,9 +318,8 @@ def run_pipeline(
     persisted: list[DataFrame] = []
 
     def _p(df: DataFrame) -> DataFrame:
-        if cache:
-            df = df.persist(lvl)
-            persisted.append(df)
+        df = df.persist(lvl)
+        persisted.append(df)
         return df
 
     def _materialize(name: str, inputs: list, fn: Callable) -> DataFrame:
@@ -427,13 +330,13 @@ def run_pipeline(
         # S6: role/ts metadata becomes mention-bearing fabricated turns
         transcripts = assembly.fabricated_metadata_turns(transcripts)
     # the raw input is itself a fan-out point: the salted-offset join
-    # reads it twice (rows + per-group partial sums) and doc_chunks /
-    # docs read it again — for a generated/derived source each of those
+    # reads it twice (rows + per-group partial sums) and doc_chunks
+    # reads it again — for a generated/derived source each of those
     # is a full recompute (measured r7: the bench corpus is a mapInPandas
     # generator, so the un-persisted turn table ran 2-4× per pipeline
     # materialization). Persist only if the caller has not already
     # chosen a level (persist with a different level raises).
-    if cache and transcripts.storageLevel == StorageLevel.NONE:
+    if transcripts.storageLevel == StorageLevel.NONE:
         transcripts = _p(transcripts)
     stages = _stage_graph(
         spark, transcripts, _materialize, slim=slim, hot_threshold=hot_thr,
@@ -441,12 +344,4 @@ def run_pipeline(
         annotated=annotated, with_linking=with_linking,
         with_coref_expansion=with_coref_expansion,
     )
-    result = PipelineResult(
-        # full doc strings: tests/queries only
-        docs=assembly.doc_text_salted(transcripts),
-        **stages,
-        extras={"persisted": persisted},
-    )
-    if _plan_cache_enabled():
-        _plan_cache_put(spark, _ck_dfs, _ck_scalars, result)
-    return result
+    return PipelineResult(**stages, persisted=persisted)

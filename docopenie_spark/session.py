@@ -26,10 +26,9 @@ ARROW_BATCH = 10_000  # rows per Arrow batch handed to pandas UDFs
 #
 # A Broadcast pickles into a UDF closure BY ID, so two otherwise
 # identical Python-stage plans built from separate ``sc.broadcast``
-# calls carry different command bytes and never compare semantically
-# equal (Dataset.sameSemantics, CacheManager's canonical-plan lookup) —
-# measured r7: every fresh ``annotate()``/``parse_extract_annotate``
-# subtree missed both the run_pipeline plan cache and an already-
+# calls carry different command bytes and never match in CacheManager's
+# canonical-plan lookup — measured r7: every fresh
+# ``annotate()``/``parse_extract_annotate`` subtree missed an already-
 # registered persist of the identical pass. Returning the SAME Broadcast
 # for identical dictionary content restores plan equality. This shares
 # static config data (name dictionaries), never computed results.

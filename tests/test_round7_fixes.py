@@ -191,66 +191,86 @@ def test_fused_arrow_null_struct_layout(spark):
             assert r.e_text is not None and r.e_name is not None
 
 
-# --------------------------------------------- run_pipeline plan cache
+# ------------------------------------- runner calls share nothing across calls
 
-def test_plan_cache_hit_reuses_plans_and_repersists(spark):
-    """Two semantically identical invocations return the SAME lazy DAG
-    (plan reuse — never data: the fan-out persists re-register empty
-    after an unpersist, so every action recomputes from the inputs)."""
-    from pyspark import StorageLevel
+def _build(spark, runner, transcripts):
+    """(row count, release) of one runner call: ``run_pipeline``'s
+    triples or ``annotate``'s table."""
+    from docopenie_spark.plans import pipeline as pl
+
+    if runner == "annotate":
+        ann = pl.annotate(spark, transcripts)
+        return ann.count(), lambda: ann.unpersist(blocking=True)
+    r = pl.run_pipeline(spark, transcripts)
+    return r.triples.count(), lambda: r.unpersist(blocking=True)
+
+
+def _write_corpus(spark, path, n_turns, seed):
+    datagen.transcripts_df(spark, n_turns, seed=seed).write.parquet(str(path))
+
+
+@pytest.mark.parametrize("runner", ["run_pipeline", "annotate"])
+def test_rewritten_source_is_rebuilt(spark, tmp_path, runner):
+    """A parquet source rewritten in place between two builds is built
+    from its new files: the second call must not hand back the first
+    call's plan over the old file listing."""
+    import shutil
+
+    src = tmp_path / "src"
+    _write_corpus(spark, src, 160, seed=3)
+    n_old, release = _build(spark, runner, spark.read.parquet(str(src)))
+    release()
+
+    _write_corpus(spark, tmp_path / "new", 240, seed=4)
+    shutil.copytree(tmp_path / "new", tmp_path / "fresh")
+    shutil.rmtree(src)
+    (tmp_path / "new").rename(src)
+
+    n_new, release = _build(spark, runner, spark.read.parquet(str(src)))
+    release()
+    n_fresh, release = _build(spark, runner, spark.read.parquet(str(tmp_path / "fresh")))
+    release()
+    assert n_new == n_fresh
+    assert n_new != n_old
+
+
+def test_concurrent_run_pipeline_calls_match_solo_builds(spark):
+    """Two driver threads build and materialize different corpora at the
+    same time; each gets the same all-column row multiset as its build
+    run alone."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
 
     from docopenie_spark.plans import pipeline as pl
 
-    t1 = datagen.transcripts_df(spark, 160)
-    r1 = pl.run_pipeline(spark, t1)
-    n1 = r1.triples.count()
-    r1.unpersist()
-    assert all(df.storageLevel == StorageLevel.NONE
-               for df in r1.extras["persisted"])
+    corpora = [datagen.transcripts_df(spark, 160, seed=5),
+               datagen.transcripts_df(spark, 200, seed=6)]
 
-    # a FRESH DataFrame object with the same semantics must hit
-    t2 = datagen.transcripts_df(spark, 160)
-    assert t2 is not t1
-    r2 = pl.run_pipeline(spark, t2)
-    assert r2 is r1
-    # the hit re-applied every persist registration
-    assert all(df.storageLevel != StorageLevel.NONE
-               for df in r2.extras["persisted"])
-    # and the recomputation from inputs yields the same result
-    assert r2.triples.count() == n1
-    r2.unpersist()
+    def rows(t):
+        r = pl.run_pipeline(spark, t)
+        out = sorted(r.triples.toJSON().collect())
+        r.unpersist(blocking=True)
+        return out
 
+    solo = [rows(t) for t in corpora]
+    assert solo[0] and solo[1] and solo[0] != solo[1]
+    barrier = threading.Barrier(2)
 
-def test_plan_cache_misses_on_different_input_or_args(spark):
-    from docopenie_spark.plans import pipeline as pl
+    def together(t):
+        barrier.wait()  # both threads build and materialize at once
+        return rows(t)
 
-    t = datagen.transcripts_df(spark, 160)
-    r_full = pl.run_pipeline(spark, t)
-    assert pl.run_pipeline(spark, datagen.transcripts_df(spark, 168)) is not r_full
-    assert pl.run_pipeline(spark, t, with_coref_expansion=False) is not r_full
-    for r in (r_full,):
-        r.unpersist()
-
-
-def test_plan_cache_kill_switch(spark, monkeypatch):
-    from docopenie_spark.plans import pipeline as pl
-
-    t = datagen.transcripts_df(spark, 176)
-    r1 = pl.run_pipeline(spark, t)
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
-    r2 = pl.run_pipeline(spark, t)
-    assert r2 is not r1
-    r1.unpersist()
-    r2.unpersist()
+    with ThreadPoolExecutor(2) as pool:
+        assert list(pool.map(together, corpora)) == solo
 
 
 # ------------------------------------------------- broadcast content sharing
 #
 # r7: a fresh sc.broadcast id pickled into a UDF closure made two
 # otherwise identical Python-stage plans semantically UNEQUAL, so fresh
-# annotate()/parse_extract_annotate subtrees missed both the plan cache
-# and CacheManager's canonical lookup. content_broadcast shares the
-# Broadcast by dictionary content; these pin the equality it restores.
+# annotate()/parse_extract_annotate subtrees missed CacheManager's
+# canonical lookup. content_broadcast shares the Broadcast by dictionary
+# content; these pin the equality it restores.
 
 def test_content_broadcast_identity_and_separation(spark):
     from docopenie_spark.session import content_broadcast
@@ -276,39 +296,3 @@ def test_fused_pass_plans_semantically_equal(spark):
     mk = lambda: fused.parse_extract_annotate(
         turns, {"Ada"}, {"Springfield"}, {"Lovelace"})
     assert mk().sameSemantics(mk())
-
-
-def test_annotate_plan_cache_hit_and_repersist(spark):
-    from pyspark import StorageLevel
-    from docopenie_spark.plans import pipeline as pl
-
-    t = datagen.transcripts_df(spark, 184)
-    a1 = pl.annotate(spark, t)
-    n1 = a1.count()
-    a1.unpersist()
-    a2 = pl.annotate(spark, t)
-    assert a2 is a1  # identical invocation returns the same lazy plan
-    # the hit re-registered the dropped persist (empty — recomputes)
-    assert a2.storageLevel != StorageLevel.NONE
-    assert a2.count() == n1
-    # a different input or scalar misses
-    assert pl.annotate(spark, datagen.transcripts_df(spark, 192)) is not a1
-    assert pl.annotate(spark, t, fabricate_metadata=True) is not a1
-    a2.unpersist()
-
-
-def test_eval_diff_pipelines_hit_plan_cache_with_fresh_annotate(spark):
-    from docopenie_spark.plans import pipeline as pl
-
-    t = datagen.transcripts_df(spark, 200)
-    a1 = pl.annotate(spark, t)
-    r1 = pl.run_pipeline(spark, t, with_linking=False,
-                         with_coref_expansion=False, annotated=a1)
-    # a SECOND, freshly constructed annotate over the same input is the
-    # same object (annotate cache), so the run_pipeline key short-circuits
-    a2 = pl.annotate(spark, t)
-    r2 = pl.run_pipeline(spark, t, with_linking=False,
-                         with_coref_expansion=False, annotated=a2)
-    assert r2 is r1
-    r1.unpersist()
-    a1.unpersist()

@@ -1,6 +1,7 @@
 """Profile where run_pipeline's DAG-CONSTRUCTION wall time goes (driver
-py4j/analysis only — nothing is executed). Prints per-stage construction
-walls for a warm second call, which is what bench.py repeats 2-3 pay.
+py4j/analysis only — nothing is executed). Every call builds the DAG
+anew, so the repeats after the first show the warm-JVM construction
+cost that each of bench.py's timed repeats pays.
 
 Usage: python tools/profile_construction.py [sf_dir] [n_reps]
 """
@@ -46,7 +47,6 @@ def main():
 
     targets = [
         (assembly, "with_turn_offsets"),
-        (assembly, "doc_text_salted"),
         (assembly, "doc_chunks"),
         (fused, "parse_extract_annotate"),
         (fused, "split_sentences"),
